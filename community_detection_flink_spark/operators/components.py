@@ -42,6 +42,18 @@ from community_detection_flink_spark.plans.iteration import (
 )
 
 MAX_ROUNDS = 50
+# contraction rounds chained per landing (r10).  The per-landing
+# write+read+schedule floor (~1.6 s at sf0.1) dominated
+# `emb_dup_clusters` (5 landings for a 5-round converge — VERDICT r9
+# #5); chaining 2 rounds cuts that to 3 landings (with per-round
+# observations detecting a mid-batch fixed point), and fixed-point
+# idempotence (see connected_components) makes any overshot rounds
+# output-identical.  2 is the MEASURED optimum, not a guess:
+# per-landing Catalyst/codegen cost grows super-linearly with chained
+# star depth (sf0.1 kNN graph, same output: batch=1 ≈ batch=2 ≈
+# 10–14 s end-to-end, batch=3 ≈ 47–51 s), so deeper chaining loses
+# far more in planning than it saves in landings.
+ROUNDS_PER_LANDING = 2
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -75,7 +87,6 @@ def connected_components(
     vertices: DataFrame | None = None,
     max_rounds: int = MAX_ROUNDS,
     mat: Materializer | None = None,
-    rounds_per_landing: int = 2,
 ) -> DataFrame:
     """Component assignment ``(vId, comp)`` — comp = min vertex id of
     the component (deterministic canonical label).
@@ -91,20 +102,7 @@ def connected_components(
     stars, which BOTH stars leave bit-identical — large-star keeps
     every (child > root) edge attached to the root, small-star
     re-emits it — so overshooting the fixed point never changes the
-    answer).
-
-    ``rounds_per_landing`` (r10): contraction rounds chained per
-    parquet materialization.  The per-landing write+read+schedule
-    floor (~1.6 s at sf0.1) dominated `emb_dup_clusters` (5 landings
-    for a 5-round converge — VERDICT r9 #5); chaining 2 rounds cuts
-    that to 3 landings (with per-round observations detecting a
-    mid-batch fixed point), and fixed-point idempotence (above) makes
-    any overshot rounds output-identical.  2 is the MEASURED optimum,
-    not a guess: per-landing Catalyst/codegen cost grows super-
-    linearly with chained star depth (sf0.1 kNN graph, same output:
-    batch=1 ≈ batch=2 ≈ 10–14 s end-to-end, batch=3 ≈ 47–51 s), so
-    deeper chaining loses far more in planning than it saves in
-    landings.
+    answer).  Rounds are chained ``ROUNDS_PER_LANDING`` per landing.
     """
     spark = edges.sparkSession
     mat = mat or Materializer(spark)
@@ -127,15 +125,6 @@ def connected_components(
     # caller's whole pipeline once more at final-join time (r11).
     e = mat(e, "cc-edges")
     init_e = e  # its files back all_v in the RETURNED plan: never drop
-    # loop-width sizing (r11, the refinement.py:136 rule): the loop
-    # shuffles the same known-size edge state every round; ~300k rows
-    # per partition, clamped at the session value so cluster-scale
-    # runs keep their width.  The count is a parquet-metadata read of
-    # the landed state, not a recompute.  AQE stays ON in this loop
-    # (the r10 A/B: non-adaptive was 2× slower here — the stars'
-    # min-label sides need runtime broadcast discovery).
-    session_sp = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    loop_sp = max(1, min(session_sp, e.count() // 300_000 + 1))
     all_v = e.select(F.col("u").alias("vId")).union(e.select(F.col("v").alias("vId")))
     if vertices is not None:
         vc = vertices.columns[0]
@@ -143,7 +132,7 @@ def connected_components(
     all_v = all_v.distinct()
 
     prev_sig = None
-    batch = max(1, int(rounds_per_landing))
+    batch = ROUNDS_PER_LANDING
     # NOTE (r10): this loop deliberately KEEPS adaptive planning,
     # unlike refinement/MIS/incremental — measured at sf0.1 the
     # non-adaptive variant was 2× SLOWER (9.6 → 18.4 s): the stars'
@@ -151,8 +140,9 @@ def connected_components(
     # broadcast hint, and AQE's runtime size discovery is what turns
     # those joins into broadcasts at small-state scale.  The job-floor
     # rationale only wins where every join is already hint-broadcast.
-    n_landed = 0
-    with scoped_shuffle_partitions(spark, loop_sp):
+    # Loop width (r11, plans.scoped_shuffle_partitions): the count is a
+    # parquet-metadata read of the landed edge state, not a recompute.
+    with scoped_shuffle_partitions(spark, e.count(), 1):
         for done in range(0, max_rounds, batch):
             # truncate the last batch so the total never exceeds max_rounds
             # (r11, closes the r10 ADVICE finding: a full final batch could
@@ -182,14 +172,13 @@ def connected_components(
                 obss.append(ob)
             # r13: in-loop landings are LIGHT (localCheckpoint — same
             # logical-plan truncation as parquet, no write/commit/read;
-            # see plans.Materializer) except every 4th, which stays
-            # parquet so estimated-stats drift is reset.  Cheap here
-            # BECAUSE the plan is truncated — the r11 persist() A/B
-            # (75% slower, above) failed on plan growth, which a
-            # LogicalRDD does not have.  AQE stays on: its runtime
-            # sizes make the drifted estimates mostly moot anyway.
-            n_landed += 1
-            e = mat(nxt, "cc-edges", light=n_landed % 4 != 0)
+            # plans.Materializer re-lands every 4th on parquet so
+            # estimated-stats drift is reset).  Cheap here BECAUSE the
+            # plan is truncated — the r11 persist() A/B (75% slower,
+            # above) failed on plan growth, which a LogicalRDD does not
+            # have.  AQE stays on: its runtime sizes make the drifted
+            # estimates mostly moot anyway.
+            e = mat(nxt, "cc-edges", light=True)
             if prev_e is not init_e:
                 mat.drop(prev_e)
             sigs = [(ob.get["n"], ob.get["h"]) for ob in obss]

@@ -181,7 +181,7 @@ def k_core(edges: DataFrame, k: int, max_rounds: int = 100) -> DataFrame:
             )
             .observe(ob, F.count(F.lit(1)).alias("n")),
             "kcore",
-            light=(_round + 1) % 4 != 0,
+            light=True,
         )
         n_next = int(ob.get["n"] or 0)
         mat.drop(cur)
@@ -239,12 +239,12 @@ def bfs_distances(
             .select("vId", F.lit(d).cast("long").alias("dist"))
             .observe(ob, F.count(F.lit(1)).alias("n")),
             "bfs",
-            light=d % 4 != 0,
+            light=True,
         )
         if int(ob.get["n"] or 0) == 0:
             mat.drop(nxt)
             break
-        new_visited = mat(visited.unionByName(nxt), "bfs-vis", light=d % 4 != 0)
+        new_visited = mat(visited.unionByName(nxt), "bfs-vis", light=True)
         mat.drop(visited)
         mat.drop(nxt)
         visited = new_visited
@@ -474,8 +474,8 @@ def label_propagation(edges: DataFrame, rounds: int = 4) -> DataFrame:
             .select(F.col("src").alias("vId"), "label"),
             f"lpa-{r}",
             # NOT light: measured 2x slower with light landings here
-            # (tools/ab_light_queries.py r13: 7.49 vs 3.66 s min-of-2 —
-            # the per-round edges-x-labels join plans off the landed
+            # (plans/r13/ab_light_queries_sf01.txt: 7.49 vs 3.66 s
+            # min-of-2 — the per-round edges-x-labels join plans off the landed
             # stats, and a LogicalRDD's estimates flip it to a shuffle
             # join that AQE does not fully claw back)
         )
@@ -526,7 +526,7 @@ def sssp_weighted(
             # FLAT here — 11.71 vs 11.81 s min-of-2, kept for the
             # avoided write/commit litter; the min-aggregate absorbs
             # the drifted estimates the inner-join loops choke on)
-            light=(_round + 1) % 4 != 0,
+            light=True,
         )
         mat.drop(dist)
         dist = nxt
@@ -655,9 +655,9 @@ def landmark_distances(
     for d in range(1, int(max_depth) + 1):
         # r13: emptiness test rides the landing as an Observation (one
         # job per round instead of land + count).  NOT light: measured
-        # ~2x slower with localCheckpoint landings here (r13
-        # tools/ab_light_queries.py: g_landmark_distances 6.71 vs
-        # 3.53 s, g_centrality_approx 7.25 vs 3.49 s min-of-2) — the
+        # ~2x slower with localCheckpoint landings here
+        # (plans/r13/ab_light_queries_sf01_run2.txt: g_landmark_distances
+        # 6.71 vs 3.53 s, g_centrality_approx 7.25 vs 3.49 s min-of-2) — the
         # per-round frontier x edges inner join plans off the landed
         # stats, which a LogicalRDD's estimates wreck.
         ob = Observation()
@@ -812,9 +812,9 @@ def k_truss(edges: DataFrame, k: int = 4, max_rounds: int = 50) -> DataFrame:
         )
         # r13: convergence count rides the landing as an Observation
         # (one job per round instead of land + count).  NOT light:
-        # measured 15% slower with localCheckpoint landings (r13
-        # tools/ab_light_queries.py: 96.6 vs 83.6 s min-of-2) — the
-        # wedge join multiplies off the landed stats.
+        # measured 15% slower with localCheckpoint landings
+        # (plans/r13/ab_light_queries_sf01_run2.txt: 96.6 vs 83.6 s
+        # min-of-2) — the wedge join multiplies off the landed stats.
         ob = Observation()
         nxt = mat(
             support.observe(ob, F.count(F.lit(1)).alias("n")),

@@ -456,14 +456,11 @@ def _elect_and_refine(
     loop_edges = clean_new.repartition("src").persist()  # see refine_partition
     cur = part
     n_rounds = 0
-    # loop-width sizing, same rule as refine_partition (r10): ~300k
-    # edge rows per partition, clamped at the session width — the
-    # per-batch loop shuffles fixed-size state and the session width
-    # over-splits it (measured there: 8 vs 32 = 57-68s vs 75s)
+    # loop-width sizing, same rule as refine_partition
+    # (plans.scoped_shuffle_partitions): the per-batch loop shuffles
+    # fixed-size state and the session width over-splits it
     _spark = vertices.sparkSession
-    _session_sp = int(_spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    _loop_sp = max(4, min(_session_sp, n_clean_edges // 300_000 + 1))
-    with no_aqe(_spark), scoped_shuffle_partitions(_spark, _loop_sp):
+    with no_aqe(_spark), scoped_shuffle_partitions(_spark, n_clean_edges, 4):
         cur_vcd = community_adjacency(cur, loop_edges).persist()
         # persisted but not forced: the first broadcast in best_movement
         # materializes it; the second reads the cache (see refine_partition)
@@ -478,7 +475,7 @@ def _elect_and_refine(
                 "inc-mv",
                 # NOT light: this loop plans non-adaptively, so the
                 # parquet landing's true file stats are load-bearing
-                # (see refinement.HEAVY_LANDING_EVERY's measured A/B)
+                # (plans/r13/ab_refine_light_NEGATIVE_sf01.txt)
             )
             mat.release()
             n_rounds += 1
@@ -696,19 +693,16 @@ def _refine_scoped(
     # scoped rounds are neighborhood-sized over persisted scope_edges —
     # non-adaptive planning (plans.no_aqe) keeps the per-round job
     # count at the query count instead of the query-stage count.
-    # Loop width (r11, VERDICT r10 #4): the ~300k-rows rule sized on
-    # the ESTIMATED scope edge count — |V_R| (already counted by the
-    # probe's Observation) × the graph's mean out-degree from two
-    # landed-state counts, no extra edge-scan job.  Clamped at the
-    # session width as everywhere else.
+    # Loop width (r11, VERDICT r10 #4): plans.scoped_shuffle_partitions
+    # sized on the ESTIMATED scope edge count — |V_R| (already counted
+    # by the probe's Observation) × the graph's mean out-degree from
+    # two landed-state counts, no extra edge-scan job.
     _spark = vertices.sparkSession
-    _session_sp = int(_spark.conf.get("spark.sql.shuffle.partitions", "200"))
     _n_clean_edges = (
         clean_new.count() if n_clean_edges is None else int(n_clean_edges)
     )
     _est_edges = int(vr_obs.get["n"] or 0) * _n_clean_edges // max(1, n_clean)
-    _loop_sp = max(1, min(_session_sp, _est_edges // 300_000 + 1))
-    with no_aqe(_spark), scoped_shuffle_partitions(_spark, _loop_sp):
+    with no_aqe(_spark), scoped_shuffle_partitions(_spark, _est_edges, 1):
         cur_vcd = _vcd(cur).persist()
         cur_cs = community_stats(cur, scope_edges, vcd=cur_vcd).persist()
         for _ in range(rounds):
@@ -724,7 +718,7 @@ def _refine_scoped(
                 cur.join(m_ids, "vId", "left_anti").unionByName(moved_m),
                 "inc-mv",
                 # NOT light: non-adaptive loop, parquet stats are
-                # load-bearing (refinement.HEAVY_LANDING_EVERY's A/B)
+                # load-bearing (plans/r13/ab_refine_light_NEGATIVE_sf01.txt)
             )
             mat.release()
             n_rounds += 1

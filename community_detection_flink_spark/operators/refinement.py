@@ -18,8 +18,6 @@ driver.
 
 from __future__ import annotations
 
-import os
-
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation
@@ -42,19 +40,6 @@ from community_detection_flink_spark.plans.iteration import (
 
 THRESHOLD = 0.01  # DistributedWCC.scala:28
 MAX_RETRIES = 5  # DistributedWCC.scala:30
-# r13 MEASURED NEGATIVE (kept as a record): landing the movement loop's
-# round states via localCheckpoint instead of parquet was 2.7-3x SLOWER
-# at sf0.1 (interleaved A/B, tools/ab_refine.py: light 136-156 s vs
-# parquet 50 s for identical results and job counts).  The loop plans
-# non-adaptively, so join strategies come from STATIC stats; a
-# LogicalRDD carries the origin plan's ESTIMATED stats, and the
-# movement plan's inner-join estimates (size products) blow past the
-# 64 MB broadcast threshold immediately — the label-map joins flip to
-# shuffle joins inside otherwise-identical jobs.  Parquet's true
-# file-size stats are load-bearing here.  AQE-on loops (connected
-# components, k-core, BFS...) don't have this failure mode and use
-# light landings (plans.Materializer).
-HEAVY_LANDING_EVERY = 4  # cadence used by loops where light IS safe
 
 
 @dataclass
@@ -88,8 +73,6 @@ def refine_partition(
     mat: Materializer | None = None,
     tri: DataFrame | None = None,
     history: list | None = None,
-    materialize_every: int = 1,
-    moves_history: list | None = None,
 ) -> tuple[DataFrame, DataFrame, float, float, int]:
     """Run the accept-if-improved movement loop.
 
@@ -107,9 +90,6 @@ def refine_partition(
     Returns (best_vertices, best_stats, best_wcc, global_cc, rounds).
     ``history``, if given, receives the initial WCC and each ACCEPTED
     round's WCC (driver-side floats the loop computes anyway).
-    ``moves_history``, if given, receives each landed round's moved-
-    vertex count (the Observation the loop already pays for) — scale
-    telemetry for SCALING.md's round-floor analysis, zero extra jobs.
 
     Per-round plan shape: ONE pass over the triplets per labeling — the
     two label joins feed directly into the ``community_adjacency``
@@ -121,201 +101,149 @@ def refine_partition(
     per-round tC pass into three joins + one aggregate (see
     ``intra_triangle_counts``); computed here if absent.
 
-    ``materialize_every``: parquet-land the accepted labeling every
-    k-th accepted round instead of every round (intermediate rounds
-    carry ≤ k−1 rounds of raw lineage rooted in persisted caches —
-    bounded, so Catalyst's compounding-stats pathology stays away).
-    Parquet states and in-memory caches a raw-lineage state still
-    depends on are dropped only at the next landing.  MEASURED at
-    sf0.1 / local[32] (SCALING.md): k=1 66s vs k=2 190s for the same
-    16 rounds — a raw-lineage labeling is RE-EXECUTED by every
-    consumer job of the next round (movement pass + vcd forcing),
-    which costs far more than the parquet round-trip it saves.  k=1
-    stays the default; the knob documents the measured trade.
+    Every round's labeling is landed on parquet (SCALING.md measured a
+    raw-lineage every-2nd-round cadence ~3× slower: a raw labeling is
+    RE-EXECUTED by every consumer job of the next round).  The loop's
+    caches are released on every exit, exceptions included.
     """
+    spark = vertices.sparkSession
+    mat = mat or Materializer(spark)
     if tri is None:
         # batch-scale triangle enumeration stays ADAPTIVE — only the
         # landed-parquet loop below goes non-adaptive
-        mat = mat or Materializer(vertices.sparkSession)
         tri = mat(triangles(clean_edges, mat=mat), "tri-static")
         mat.release()
-    spark = vertices.sparkSession
-    # loop-width sizing (r10): the loop shuffles the SAME known-size
-    # state every round; the session width is sized for batch scans
-    # and over-splits it into task-launch overhead.  ~300k edge rows
-    # per partition (order-controlled A/B at sf0.1, 2.37M clean edge
-    # rows: width 8 = 57–68 s vs width 32 = 75 s, identical results),
-    # clamped at the session value so cluster-scale runs keep their
-    # width — this only ever SHRINKS small-state loops.
-    session_sp = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    loop_sp = max(4, min(session_sp, clean_edges.count() // 300_000 + 1))
-    with no_aqe(spark), scoped_shuffle_partitions(spark, loop_sp):
-        return _refine_partition_impl(
-            vertices, clean_edges, vertex_count, max_retries, threshold,
-            mat, tri, history, materialize_every, moves_history,
-        )
+    # loop width (plans.scoped_shuffle_partitions): the loop shuffles
+    # the SAME known-size state every round.  Counted before no_aqe so
+    # the count plans adaptively, like the batch scans.
+    n_edges = clean_edges.count()
+    with no_aqe(spark), scoped_shuffle_partitions(spark, n_edges, 4):
+        global_cc_total = vertices.agg(F.sum("cc").alias("s")).first()["s"] or 0.0
+        global_cc = float(global_cc_total) / float(vertex_count)  # DistributedWCC.scala:261-262
 
+        caches: dict[int, DataFrame] = {}  # loop-owned, freed at exit
+        # the static triangle list is scanned once per round by the WCC
+        # eval (intra_triangle_counts) — persist it for the loop like
+        # loop_edges below, so rounds read the cache instead of
+        # re-decoding the parquet 16+ times (r12).  Persist only when
+        # the caller hasn't (so the exit unpersist never drops a
+        # caller's cache).
+        if not tri.is_cached:
+            tri = tri.persist()
+            caches[id(tri)] = tri
+        # One src-hash shuffle up front, reused every round: the label
+        # maps broadcast, so the triplets build preserves this
+        # partitioning and the per-src aggregations (vcd, vtC) and
+        # vId-keyed joins downstream need no further exchange.
+        loop_edges = clean_edges.repartition("src").persist()
+        caches[id(loop_edges)] = loop_edges
 
-def _refine_partition_impl(
-    vertices: DataFrame,
-    clean_edges: DataFrame,
-    vertex_count: int,
-    max_retries: int,
-    threshold: float,
-    mat: Materializer | None,
-    tri: DataFrame | None,
-    history: list | None,
-    materialize_every: int,
-    moves_history: list | None,
-) -> tuple[DataFrame, DataFrame, float, float, int]:
-    mat = mat or Materializer(vertices.sparkSession)
-    if tri is None:
-        tri = mat(triangles(clean_edges, mat=mat), "tri-static")
-        mat.release()
-    # the static triangle list is scanned once per round by the WCC
-    # eval (intra_triangle_counts) — persist it for the loop like
-    # loop_edges below, so rounds read the cache instead of re-decoding
-    # the parquet 16+ times (r12; same MEMORY_AND_DISK treatment and
-    # lifetime as the edge state, released with it at loop exit).
-    # Persist only when the caller hasn't (so the exit unpersist never
-    # drops a caller's cache); CDFS_AB_NO_TRI_PERSIST restores the
-    # pre-r12 per-round parquet re-read for tools/ab_refine.py.
-    tri_persisted = False
-    if not tri.is_cached and not os.environ.get("CDFS_AB_NO_TRI_PERSIST"):
-        tri = tri.persist()
-        tri_persisted = True
-    global_cc_total = vertices.agg(F.sum("cc").alias("s")).first()["s"] or 0.0
-    global_cc = float(global_cc_total) / float(vertex_count)  # DistributedWCC.scala:261-262
+        def _eval(labels: DataFrame) -> tuple[DataFrame, DataFrame, float]:
+            """Fused community-adjacency cache + stats + WCC for one labeling.
 
-    # One src-hash shuffle up front, reused every round: the label maps
-    # broadcast, so the triplets build preserves this partitioning and
-    # the per-src aggregations (vcd, vtC) and vId-keyed joins downstream
-    # need no further exchange.
-    loop_edges = clean_edges.repartition("src").persist()
+            ``cs`` is persist()ed but never forced with its own job: the
+            ``global_wcc`` action below materializes it together with the
+            ``vcd`` cache it derives from, so the movement pass's two
+            broadcasts of the stats read the cache instead of re-running
+            the aggregate (a parquet round-trip per round would cost a
+            write+read job for no lineage benefit — the lineage root is
+            the cached vcd).  The loop materializes only the final
+            accepted stats.
+            """
+            vcd = community_adjacency(labels, loop_edges).persist()
+            cs = community_stats(labels, loop_edges, vcd=vcd).persist()
+            caches.update({id(vcd): vcd, id(cs): cs})
+            wcc = global_wcc(labels, loop_edges, cs, vertex_count, vcd=vcd, tri=tri)
+            return vcd, cs, wcc
 
-    def _eval(labels: DataFrame) -> tuple[DataFrame, DataFrame, float]:
-        """Fused community-adjacency cache + stats + WCC for one labeling.
+        def _unpersist(*dfs: DataFrame) -> None:
+            for df in dfs:
+                caches.pop(id(df)).unpersist(False)
 
-        ``cs`` is persist()ed but never forced with its own job: the
-        ``global_wcc`` action below materializes it together with the
-        ``vcd`` cache it derives from, so the movement pass's two
-        broadcasts of the stats read the cache instead of re-running
-        the aggregate (a parquet round-trip per round would cost a
-        write+read job for no lineage benefit — the lineage root is
-        the cached vcd).  The loop materializes only the final
-        accepted stats.
-        """
-        vcd = community_adjacency(labels, loop_edges).persist()
-        cs = community_stats(labels, loop_edges, vcd=vcd).persist()
-        wcc = global_wcc(labels, loop_edges, cs, vertex_count, vcd=vcd, tri=tri)
-        return vcd, cs, wcc
-
-    # r13 MEASURED NEGATIVE (record): fusing the WCC eval into the
-    # round landing (persist the raw movement output, build vcd/cs/tC
-    # over it, ride the per-vertex WCC sum on the landing as an
-    # Observation) removed one job per round ON PAPER but returned
-    # caches whose ANALYZED plans rooted at the raw movement plan
-    # instead of the landed parquet — each round's cache plan embedded
-    # the previous round's, the analysis tree grew exponentially, and
-    # the driver OOM'd inside Catalyst resolution at sf0.001.  The
-    # eval must build over the LANDED state, which forces the separate
-    # job; the [landing][stats-broadcast-build][eval] round shape
-    # stays.
-    # an already-landed input needs no second landing (r12 callers
-    # re-landed it as "best" unconditionally — one full write+read of
-    # the initial labeling per run for nothing); the loop never drops
-    # caller-owned state (`initial_input` guard below)
-    best = vertices if mat.is_landed(vertices) else mat(vertices, "best")
-    initial_input = best
-    best_vcd, best_cs, best_wcc = _eval(best)
-    if history is not None:
-        history.append(best_wcc)
-
-    retries = max_retries
-    rounds = 0
-    improved = True
-    # deferred cleanup for materialize_every > 1: a raw-lineage `best`
-    # still READS the superseded parquet states and persisted caches in
-    # its plan, so they are only released at the next parquet landing
-    pending_drop: list[DataFrame] = []
-    pending_unpersist: list[DataFrame] = []
-
-    def _flush_pending() -> None:
-        for df in pending_unpersist:
-            df.unpersist(False)
-        pending_unpersist.clear()
-        for df in pending_drop:
-            mat.drop(df)
-        pending_drop.clear()
-
-    while improved and retries > 0:
-        obs = Observation()
-        raw_moved = best_movement(
-            best, loop_edges, best_cs, global_cc, vertex_count,
-            mat=mat, vcd=best_vcd, moves_observation=obs,
-        )
-        land = (rounds + 1) % materialize_every == 0
-        moved = mat(raw_moved, "moved") if land else raw_moved
-        if land and moves_history is not None:
-            moves_history.append(int(obs.get["moves"]))
-        if land and obs.get["moves"] == 0:
-            # fixed point: identical labels ⇒ identical stats ⇒ the
-            # evaluate-and-compare below would conclude "no
-            # improvement" after recomputing everything — skip it.
-            # (Only decidable when the pass was landed: the
-            # observation needs an executed action.)
-            rounds += 1
-            mat.drop(moved)
-            improved = False
-            break
-        new_vcd, new_cs, new_wcc = _eval(moved)
-        retries -= 1
-        rounds += 1
-        if new_wcc > best_wcc:
-            # Scala's newWcc/bestWcc - 1 > threshold is Infinity > 0.01
-            # when bestWcc == 0, so an improvement from 0 also resets
-            # the retry budget (DistributedWCC.scala:309-312).
-            if best_wcc <= 0 or (new_wcc / best_wcc - 1.0) > threshold:
-                retries = max_retries
-            pending_unpersist += [best_vcd, best_cs]
-            if best is not initial_input:
-                # caller-owned input state is never dropped (it may be
-                # reused across calls — tools/ab_refine.py does)
-                pending_drop.append(best)
-            best, best_cs, best_wcc, best_vcd = moved, new_cs, new_wcc, new_vcd
-            if land:
-                # the accepted state is on parquet: nothing live reads
-                # the superseded states or the raw rounds' ephemeral
-                # caches any more
-                mat.release()
-                _flush_pending()
+        try:
+            # r13 MEASURED NEGATIVE (record): fusing the WCC eval into
+            # the round landing (persist the raw movement output, build
+            # vcd/cs/tC over it, ride the per-vertex WCC sum on the
+            # landing as an Observation) removed one job per round ON
+            # PAPER but returned caches whose ANALYZED plans rooted at
+            # the raw movement plan instead of the landed parquet — each
+            # round's cache plan embedded the previous round's, the
+            # analysis tree grew exponentially, and the driver OOM'd
+            # inside Catalyst resolution at sf0.001.  The eval must
+            # build over the LANDED state, which forces the separate
+            # job; the [landing][stats-broadcast-build][eval] round
+            # shape stays.
+            # an already-landed input needs no second landing (r12
+            # callers re-landed it as "best" unconditionally — one full
+            # write+read of the initial labeling per run for nothing);
+            # the loop never drops caller-owned state (`initial_input`)
+            best = vertices if mat.is_landed(vertices) else mat(vertices, "best")
+            initial_input = best
+            best_vcd, best_cs, best_wcc = _eval(best)
             if history is not None:
                 history.append(best_wcc)
-        else:
-            new_vcd.unpersist(False)
-            new_cs.unpersist(False)
-            mat.drop(moved)     # rejected labeling (no-op when raw)
-            improved = False
-    if pending_drop or pending_unpersist or mat.is_light(best):
-        # loop ended on a raw-lineage (or rejected-landing) best, or on
-        # a LIGHT round state: land it on parquet before releasing the
-        # states its plan still reads — returned state must be durable
-        # with true file-size stats (light blocks die with executors
-        # and carry estimated stats)
-        old_best = best
-        best = mat(best, "best-final")
-        _flush_pending()
-        if mat.is_light(old_best):
-            mat.drop(old_best)
-    mat.release()  # any ephemeral caches from a final rejected round
-    # the returned stats must outlive the caches they derive from
-    cached_cs = best_cs
-    best_cs = mat(best_cs, "cs-final")
-    cached_cs.unpersist(False)
-    best_vcd.unpersist(False)
-    loop_edges.unpersist(False)
-    if tri_persisted:
-        tri.unpersist(False)
+
+            retries = max_retries
+            rounds = 0
+            while retries > 0:
+                obs = Observation()
+                # r13 MEASURED NEGATIVE (record): landing the round
+                # states via localCheckpoint instead of parquet was
+                # 2.7-3x SLOWER at sf0.1 (interleaved A/B,
+                # plans/r13/ab_refine_light_NEGATIVE_sf01.txt: light
+                # 136-156 s vs parquet 50 s for identical results and
+                # job counts).  The loop plans non-adaptively, so join
+                # strategies come from STATIC stats; a LogicalRDD
+                # carries the origin plan's ESTIMATED stats, and the
+                # movement plan's inner-join estimates (size products)
+                # blow past the 64 MB broadcast threshold immediately —
+                # the label-map joins flip to shuffle joins inside
+                # otherwise-identical jobs.  Parquet's true file-size
+                # stats are load-bearing here.
+                moved = mat(
+                    best_movement(
+                        best, loop_edges, best_cs, global_cc, vertex_count,
+                        mat=mat, vcd=best_vcd, moves_observation=obs,
+                    ),
+                    "moved",
+                )
+                rounds += 1
+                if obs.get["moves"] == 0:
+                    # fixed point: identical labels ⇒ identical stats ⇒
+                    # the evaluate-and-compare below would conclude "no
+                    # improvement" after recomputing everything — skip it
+                    mat.drop(moved)
+                    break
+                new_vcd, new_cs, new_wcc = _eval(moved)
+                retries -= 1
+                if new_wcc <= best_wcc:
+                    _unpersist(new_vcd, new_cs)
+                    mat.drop(moved)
+                    break
+                # Scala's newWcc/bestWcc - 1 > threshold is Infinity >
+                # 0.01 when bestWcc == 0, so an improvement from 0 also
+                # resets the retry budget (DistributedWCC.scala:309-312).
+                if best_wcc <= 0 or (new_wcc / best_wcc - 1.0) > threshold:
+                    retries = max_retries
+                # the accepted state is on parquet: nothing live reads
+                # the superseded state or the round's ephemeral caches
+                mat.release()
+                _unpersist(best_vcd, best_cs)
+                if best is not initial_input:
+                    # caller-owned input state is never dropped (it may
+                    # be reused across calls)
+                    mat.drop(best)
+                best, best_cs, best_wcc, best_vcd = moved, new_cs, new_wcc, new_vcd
+                if history is not None:
+                    history.append(best_wcc)
+            mat.release()  # any ephemeral caches from a final rejected round
+            # the returned stats must outlive the caches they derive from
+            best_cs = mat(best_cs, "cs-final")
+        finally:
+            mat.release()
+            # newest first: the stats and vcd caches, then loop_edges, tri
+            for df in reversed(list(caches.values())):
+                df.unpersist(False)
     return best, best_cs, best_wcc, global_cc, rounds
 
 
@@ -326,7 +254,6 @@ def run_wcc(
     keep_internals: bool = False,
     pre: tuple[DataFrame, DataFrame, DataFrame] | None = None,
     mat: Materializer | None = None,
-    materialize_every: int = 1,
 ) -> WCCResult:
     """E1/E3 — full batch WCC community detection.
 
@@ -375,7 +302,7 @@ def run_wcc(
     history: list = []
     best, best_cs, best_wcc, global_cc, rounds = refine_partition(
         init, clean_edges, vertex_count, max_retries, threshold, mat=mat,
-        tri=tri, history=history, materialize_every=materialize_every,
+        tri=tri, history=history,
     )
     # only `edges` (feeds all_vertices), `best`, and `best_cs` survive
     # into the returned plans — free the pipeline intermediates (the

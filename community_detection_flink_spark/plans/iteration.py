@@ -74,8 +74,17 @@ def no_aqe(spark):
         spark.conf.set(key, old)
 
 
+# loop-width rule (r10): ~300k state rows per shuffle partition
+# (order-controlled A/B at sf0.1, 2.37M clean edge rows: width 8 =
+# 57–68 s vs width 32 = 75 s, identical results)
+ROWS_PER_PARTITION = 300_000
+# light callers re-land on parquet every this many light requests of
+# one landing name (see ``Materializer.__call__``)
+LIGHT_PARQUET_EVERY = 4
+
+
 @contextmanager
-def scoped_shuffle_partitions(spark, n: int):
+def scoped_shuffle_partitions(spark, rows: int, floor: int):
     """Scope ``spark.sql.shuffle.partitions`` for queries COMPILED
     inside the block — the loop-state sibling of :func:`no_aqe`.
 
@@ -83,13 +92,15 @@ def scoped_shuffle_partitions(spark, n: int):
     session's shuffle width is sized for batch scans and over-splits
     that state into task-launch overhead (measured on the sf0.1
     refinement loop: 32 → 8 partitions = 74.7 → 62.9 s for identical
-    results).  Callers clamp ``n`` at the session value so batch-scale
-    and cluster behavior never change — this only ever SHRINKS the
-    width for a scoped loop.
+    results).  The width is one partition per ``ROWS_PER_PARTITION``
+    of ``rows`` (the loop state's row count), at least ``floor``, and
+    clamped at the session value so batch-scale and cluster behavior
+    never change — this only ever SHRINKS the width for a scoped loop.
     """
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
-    spark.conf.set(key, str(int(n)))
+    n = max(floor, min(int(old), int(rows) // ROWS_PER_PARTITION + 1))
+    spark.conf.set(key, str(n))
     try:
         yield
     finally:
@@ -116,32 +127,37 @@ class Materializer:
         )
         self._i = 0
         self._ephemeral: list[DataFrame] = []
-        # df -> backing path, keyed by id() WITH a strong reference to
-        # the df (prevents id reuse after GC) so drop() can delete the
-        # files of a superseded state
-        self._by_df: dict[int, tuple[DataFrame, str]] = {}
+        # df -> backing path (None for a light landing), keyed by id()
+        # WITH a strong reference to the df (prevents id reuse after GC)
+        # so drop() can delete the files of a superseded state
+        self._by_df: dict[int, tuple[DataFrame, str | None]] = {}
+        # landing name -> light requests so far (the parquet cadence)
+        self._light_n: dict[str, int] = {}
 
     def __call__(
         self, df: DataFrame, name: str = "state", light: bool = False
     ) -> DataFrame:
-        if light and not os.environ.get("CDFS_AB_NO_LIGHT_LANDING"):
+        if light:
+            # every LIGHT_PARQUET_EVERY-th light request of a name lands
+            # on parquet instead (non-light landings don't count), so
+            # estimated-stats drift is reset on a fixed cadence
+            n = self._light_n[name] = self._light_n.get(name, 0) + 1
+            light = n % LIGHT_PARQUET_EVERY != 0
+        if light:
             # LIGHT landing (r13): ``localCheckpoint(eager=True)`` —
             # one job, no file write/commit/read-back, plan truncated
             # to a LogicalRDD exactly like a parquet scan truncates it.
-            # The trade (why ``light`` is opt-in, per loop round, never
-            # the default):
+            # The trade (why ``light`` is opt-in, per loop, never the
+            # default):
             #   * the LogicalRDD carries the origin plan's ESTIMATED
             #     stats, and those compound round-over-round (measured
-            #     on 4.1: sizeInBytes bit-length ~2x/round) — callers
-            #     MUST re-land on parquet every few rounds (the loops
-            #     use a short cadence) so estimates never drift far
+            #     on 4.1: sizeInBytes bit-length ~2x/round) — hence the
+            #     parquet cadence above, so estimates never drift far
             #     from the 64MB broadcast threshold's truth;
             #   * blocks live in executor memory/disk with lineage cut,
             #     so an executor loss mid-loop is unrecoverable — fine
             #     for loop state a restart recomputes, wrong for
             #     carried/returned state (those stay parquet).
-            # CDFS_AB_NO_LIGHT_LANDING restores parquet-every-round for
-            # tools/ab_refine.py same-session A/Bs.
             out = df.localCheckpoint(eager=True)
             self._by_df[id(out)] = (out, None)
             return out
@@ -152,14 +168,9 @@ class Materializer:
         # 1-task footer-read job per landing — pure driver latency that
         # the loops pay hundreds of times per pipeline.  The writer's
         # schema IS the reader's schema (same df), so nothing changes
-        # except the job disappearing.  CDFS_AB_INFER_LANDING_SCHEMA
-        # restores the pre-r12 inferred read so tools/ab_refine.py can
-        # measure the two variants in one session (results identical —
-        # _as_nullable mirrors what inference reports).
-        if os.environ.get("CDFS_AB_INFER_LANDING_SCHEMA"):
-            out = self.spark.read.parquet(path)
-        else:
-            out = self.spark.read.schema(_as_nullable(df.schema)).parquet(path)
+        # except the job disappearing (_as_nullable mirrors what
+        # inference reports).
+        out = self.spark.read.schema(_as_nullable(df.schema)).parquet(path)
         self._by_df[id(out)] = (out, path)
         return out
 
@@ -190,13 +201,6 @@ class Materializer:
         produced — loop entries skip re-landing such inputs."""
         entry = self._by_df.get(id(df))
         return entry is not None and entry[1] is not None
-
-    def is_light(self, df: DataFrame) -> bool:
-        """True iff ``df`` is a LIGHT landing this materializer produced
-        (localCheckpoint-backed — see ``__call__``); loop exits re-land
-        such state on parquet before returning it to callers."""
-        entry = self._by_df.get(id(df))
-        return entry is not None and entry[1] is None
 
     def cache(self, df: DataFrame, name: str = "tmp", force: bool = True) -> DataFrame:
         """In-memory materialization for WITHIN-round temporaries.

@@ -75,7 +75,7 @@ def test_knn_graph_capped_stays_within_salt_blocks(spark):
 
 
 @pytest.mark.slow
-def test_connected_components_batched_matches_single_round(spark):
+def test_connected_components_path_clique_isolated(spark):
     from community_detection_flink_spark.operators.components import (
         connected_components,
     )
@@ -89,18 +89,13 @@ def test_connected_components_batched_matches_single_round(spark):
         [(i,) for i in range(13)] + [(100 + i,) for i in range(4)] + [(999,)],
         "vId LONG",
     )
-    got1 = sorted(map(tuple, connected_components(
-        e, vertices=vs, rounds_per_landing=1).collect()))
-    got2 = sorted(map(tuple, connected_components(
-        e, vertices=vs, rounds_per_landing=2).collect()))
-    got3 = sorted(map(tuple, connected_components(
-        e, vertices=vs, rounds_per_landing=3).collect()))
+    got = sorted(map(tuple, connected_components(e, vertices=vs).collect()))
     want = sorted(
         [(i, 0) for i in range(13)]
         + [(100 + i, 100) for i in range(4)]
         + [(999, 999)]
     )
-    assert got1 == want and got2 == want and got3 == want
+    assert got == want
 
 
 def test_minhash_store_append_is_exact(spark):

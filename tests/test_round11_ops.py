@@ -84,8 +84,9 @@ def test_ivf_index_reappend_is_idempotent(spark):
 
 
 def test_cc_max_rounds_cap_not_overshot(spark, monkeypatch):
-    """rounds_per_landing=2 with max_rounds=3 must run EXACTLY 3
-    star-contraction rounds, not 4 — the last batch is truncated."""
+    """Two rounds per landing (ROUNDS_PER_LANDING) with max_rounds=3
+    must run EXACTLY 3 star-contraction rounds, not 4 — the last batch
+    is truncated."""
     from community_detection_flink_spark.operators import components as C
 
     calls = {"n": 0}
@@ -101,7 +102,8 @@ def test_cc_max_rounds_cap_not_overshot(spark, monkeypatch):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], "u LONG, v LONG"
     )
-    C.connected_components(edges, max_rounds=3, rounds_per_landing=2)
+    assert C.ROUNDS_PER_LANDING == 2
+    C.connected_components(edges, max_rounds=3)
     assert calls["n"] == 3
 
 

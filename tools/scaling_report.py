@@ -100,8 +100,8 @@ def main() -> None:
         "following round (the movement pass feeds the vcd aggregate, the stats,",
         "AND the next movement), which costs far more than the one parquet",
         "round-trip it saves — the per-round landing is ~0.5s of the ~4s round.",
-        "`refine_partition(materialize_every=...)` keeps the knob + the",
-        "equivalence test; the default stays k=1.",
+        "Knob removed; measured k=2 loss recorded here (every round is",
+        "landed, the one remaining path).",
         "",
         "| query | sf0.001 | sf0.01 | sf0.1 | time ratio (100× data) |",
         "|---|---|---|---|---|",
@@ -207,7 +207,7 @@ otherwise.
 
 ## Refinement round floor — measured, no change made (VERDICT r3 #5)
 
-Per-round telemetry (`refine_partition(moves_history=...)`) at sf0.1:
+Per-round telemetry (a since-removed `refine_partition` moves hook) at sf0.1:
 16 accepted rounds, moves [10775, 8822, 7705, 6972, 6487, 6090, 5801,
 5538, 5316, 5138, 4962, 4758, 4659, 4549, 4441, 4329] — a plateau at
 ~22% of |V|, not a die-off — while relative WCC improvement decays to
